@@ -111,3 +111,29 @@ def qcol(name: str):
     from pyspark.sql import functions as F
 
     return F.col(quote(name))
+
+
+def qref(alias: str, name: str):
+    """:func:`qcol` qualified by a DataFrame alias (``df.alias(alias)``):
+    the quoted reference that picks one side of a join whose sides share
+    column names — the bracket accessor ``df[name]`` parses the name."""
+    from pyspark.sql import functions as F
+
+    return F.col(alias + "." + quote(name))
+
+
+# side aliases of key_join; read the joined columns back through
+# qref(JOIN_LEFT, name) / qref(JOIN_RIGHT, name)
+JOIN_LEFT, JOIN_RIGHT = "__kl__", "__kr__"
+
+
+def key_join(left, right, cols, how: str = "inner"):
+    """``left`` joined to ``right`` on NULL-SAFE equality of ``cols``,
+    with the sides aliased ``JOIN_LEFT`` / ``JOIN_RIGHT``. A NULL key is
+    a real group wherever keys come from data (the dedup rewrites, the
+    window partitions, the NULL time bucket) — plain ``on=`` equality
+    would drop or misroute it — and the aliases keep a frame joined back
+    to its own aggregate unambiguous."""
+    cond = [qref(JOIN_LEFT, c).eqNullSafe(qref(JOIN_RIGHT, c)) for c in cols]
+    return left.alias(JOIN_LEFT).join(right.alias(JOIN_RIGHT), on=cond,
+                                      how=how)

@@ -25,12 +25,15 @@ checkpoint itself fails, the exception propagates before any read.
 
 from __future__ import annotations
 
+import logging
 import threading
 import time
 from collections import deque
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.observation import Observation
+
+log = logging.getLogger("omigo_spark")
 
 
 def checkpoint_with_metrics(
@@ -71,8 +74,10 @@ def observe_async(df: DataFrame, metrics: dict[str, Column],
                   callback) -> DataFrame:
     """Return ``df`` with ``metrics`` attached via ``observe()``;
     ``callback(metrics_dict)`` runs on a shared daemon thread after the
-    returned frame's first action completes. Callback errors are
-    swallowed (a diagnostic must never fail the caller's query)."""
+    returned frame's first action completes. A callback that raises is
+    logged once, with its traceback, as a warning on the ``omigo_spark``
+    logger; it never reaches the caller's query (a diagnostic must not
+    fail it)."""
     global _poller_alive
     obs = Observation()
     out = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
@@ -105,7 +110,8 @@ def _poll_loop():
                     try:
                         cb(m)
                     except Exception:
-                        pass
+                        log.warning("observe_async: callback %r failed",
+                                    cb, exc_info=True)
             except Exception:
                 # gateway gone / session stopped: drop the watch
                 done.append(item)

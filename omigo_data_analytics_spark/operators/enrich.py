@@ -34,6 +34,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..core.colutils import JOIN_LEFT, JOIN_RIGHT, key_join, qcol, qref
 from ..core.dataframe import OmigoDF
 
 _PLACEHOLDER = re.compile(r"\{([^{}]+)\}")
@@ -60,6 +61,33 @@ def _resolve(template: str, row: dict) -> str:
         v = row.get(m.group(1), "")
         return "" if v is None else str(v)
     return _PLACEHOLDER.sub(_sub, str(template))
+
+
+def _dedup_map(df, cols: list[str], run, out_fields: list) -> OmigoDF:
+    """The dedup rewrite (ws_ext.py:96-114): ``run`` (a mapInPandas body)
+    sees each DISTINCT combination of ``cols`` once, and its
+    ``out_fields`` join back to every row of ``df``.
+
+    The join back is NULL-SAFE: dropDuplicates keeps a NULL key row and a
+    call is issued for it, but a plain equi-join would never match it
+    back (NULL != NULL). PySpark's mapInPandas re-reads its input columns
+    by PARSED name, so the distinct side carries positional names through
+    the call and ``run`` still sees the real ones."""
+    pos = [f"__k{i}__" for i in range(len(cols))]
+    out_names = [f.name for f in out_fields]
+    distinct = (df.select(*[qcol(c).alias(k) for c, k in zip(cols, pos)])
+                .dropDuplicates(pos))
+    schema = StructType([distinct.schema[k] for k in pos] + out_fields)
+
+    def _named(pdf_iter: Iterator) -> Iterator:
+        for pdf in run(p.set_axis(cols, axis=1) for p in pdf_iter):
+            yield pdf.set_axis(pos + out_names, axis=1)
+
+    enriched = distinct.mapInPandas(_named, schema=schema).toDF(
+        *cols, *out_names)
+    return OmigoDF(key_join(df, enriched, cols, "left").select(
+        *[qref(JOIN_LEFT, c) for c in df.columns],
+        *[qref(JOIN_RIGHT, f) for f in out_names]))
 
 
 def _default_http_call(req: dict) -> tuple[str, int]:
@@ -145,28 +173,12 @@ def call_web_service(odf: OmigoDF, url: str, prefix: str,
                 pdf[f] = results[f]
             yield pdf
 
+    str_fields = [StructField(f, StringType()) for f in out_fields]
     if enable_opt_exec and ph_cols:
-        # dedup rewrite: call once per distinct placeholder combination.
-        # The join back is NULL-SAFE: dropDuplicates keeps a NULL key row
-        # and a call is issued for it, but a plain equi-join would never
-        # match it back (NULL != NULL) — those rows would get NULL in all
-        # four response columns instead of the non-dedup path's strings
-        distinct = odf.df.select(*ph_cols).dropDuplicates(ph_cols)
-        schema = StructType(
-            [distinct.schema[c] for c in ph_cols]
-            + [StructField(f, StringType()) for f in out_fields])
-        enriched = distinct.mapInPandas(_run, schema=schema)
-        cond = None
-        for c in ph_cols:
-            eq = odf.df[c].eqNullSafe(enriched[c])
-            cond = eq if cond is None else (cond & eq)
-        joined = odf.df.join(enriched, cond, "left").select(
-            *[odf.df[c] for c in odf.df.columns],
-            *[enriched[f] for f in out_fields])
-        return OmigoDF(joined)
-    schema = StructType(
-        list(odf.df.schema.fields)
-        + [StructField(f, StringType()) for f in out_fields])
+        # dedup rewrite: call once per distinct placeholder combination
+        # (a NULL key row gets the same strings as in the non-dedup path)
+        return _dedup_map(odf.df, ph_cols, _run, str_fields)
+    schema = StructType(list(odf.df.schema.fields) + str_fields)
     return OmigoDF(odf.df.mapInPandas(_run, schema=schema))
 
 
@@ -178,10 +190,7 @@ def enrich_with_model(odf: OmigoDF, input_cols, model_fn: Callable,
     `model_fn(list_of_row_dicts) -> list_of_values`, called per Arrow batch
     inside mapInPandas. Deduped on input_cols then joined back, same
     rewrite as call_web_service."""
-    in_cols = list(input_cols)
-    distinct = odf.df.select(*in_cols).dropDuplicates(in_cols)
     out_field = StructType.fromDDL(f"`{out_col}` {out_type}").fields[0]
-    schema = StructType([distinct.schema[c] for c in in_cols] + [out_field])
 
     def _run(pdf_iter: Iterator) -> Iterator:
         for pdf in pdf_iter:
@@ -192,12 +201,4 @@ def enrich_with_model(odf: OmigoDF, input_cols, model_fn: Callable,
             pdf[out_col] = vals
             yield pdf
 
-    enriched = distinct.mapInPandas(_run, schema=schema)
-    # NULL-safe join back, as in call_web_service's dedup rewrite
-    cond = None
-    for c in in_cols:
-        eq = odf.df[c].eqNullSafe(enriched[c])
-        cond = eq if cond is None else (cond & eq)
-    joined = odf.df.join(enriched, cond, "left").select(
-        *[odf.df[c] for c in odf.df.columns], enriched[out_col])
-    return OmigoDF(joined)
+    return _dedup_map(odf.df, list(input_cols), _run, [out_field])

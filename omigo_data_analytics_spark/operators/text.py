@@ -507,7 +507,7 @@ def pack_sequences(odf: OmigoDF, token_col: str, budget: int,
             F.count(F.lit(1)).alias("n"),
             F.count_distinct(
                 F.concat_ws("\t", *[
-                    F.coalesce(odf.df[c].cast("string"), F.lit(""))
+                    F.coalesce(qcol(c).cast("string"), F.lit(""))
                     for c in gcols])).alias("d")).first()
         if stats["n"] != stats["d"]:
             import warnings
@@ -522,7 +522,7 @@ def pack_sequences(odf: OmigoDF, token_col: str, budget: int,
          .withColumn("__h__", h)
          .withColumn("__bkt__", F.pmod(F.col("__h__"), F.lit(n_buckets))))
     tie = F.concat_ws("\t", *[
-        F.coalesce(d[c].cast("string"), F.lit("")) for c in gcols])
+        F.coalesce(qcol(c).cast("string"), F.lit("")) for c in gcols])
     per_bucket = (d.groupBy("__bkt__")
                   .agg(F.sum(qcol(tks).cast("long")).alias("__btot__")))
     woff = (Window.orderBy("__bkt__")

@@ -24,13 +24,55 @@ Scale design (the point of each implementation):
 * ``sessionize`` — two window functions over ONE sort: lag to flag gap
   breaks, running sum over the same (key, time) order to number
   sessions. Catalyst plans both in a single Exchange+Sort pair.
+
+Hot keys (the ordered carries: asof_join, sessionize, rolling_aggregate,
+merge_intervals). A window partitioned by a SKEWED key runs the whole
+hot group in ONE task — the one shuffle-skew class AQE cannot split
+(measured 2.1-2.4x at 30% skew on the r12 skew probe; at 100 TB the hot
+key is a straggler that never finishes). ``time_buckets_sec`` switches
+each carry to the same exact two-phase skeleton:
+
+1. the carry runs LOCALLY inside (key, time-bucket) windows
+   (``__b__ = floor(t / span)``, see ``_bucket``) — parallelism is
+   buckets per key, so the hot key spreads over span/bucket tasks;
+2. a per-(key, bucket) summary, orders of magnitude smaller than the
+   data, is scanned per key in bucket order to give each bucket its
+   carry-in from the buckets before it;
+3. one null-safe join on (key, bucket) (``colutils.key_join``) feeds
+   the carry-in back to the rows; it reuses the phase-1 exchange, so
+   the big side never reshuffles.
+
+Equal times share a bucket, so tie order is untouched, and the NULL
+bucket sorts first exactly as NULL times do in the single-window plan:
+every bucketed plan is property-tested identical to its plain plan.
+What the summary carries is each operator's own (last non-null struct,
+session merge, running max with break suppression, halo replication),
+so phases 2-3 stay in the operator; only the bucket column, the bucket
+windows and the join are shared.
+
+``hot_key_rows`` (default ``"auto"`` = 262,144 rows) routes only HOT
+keys through the bucketed plan (``_route_hot_keys``): a one-pass key
+census splits the input, cold keys take the plain single-window plan
+(their partitions are small — bucketing them is pure overhead and, for
+rolling, trips the density guard), hot keys take the two-phase plan, and
+the results union. ``None`` buckets every key; an int pins the
+threshold. Without ``time_buckets_sec`` the same threshold instead arms
+a zero-extra-job hot-key WARNING on the single-window plan
+(``_watch_hot_keys``, r15): a row counter rides the existing window
+pass, its max rides the caller's first action as an observe() metric,
+and a key group at/over the threshold warns asynchronously naming
+``time_buckets_sec`` as the remedy (``None`` disables).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.colutils import JOIN_LEFT as _L, JOIN_RIGHT as _R
+from ..core.colutils import as_list, key_join, qcol, qref
 from ..core.dataframe import OmigoDF
 
 
@@ -45,24 +87,10 @@ def _epoch_sec(df: DataFrame, col: str, ref: Column | None = None) -> Column:
     strings cast directly. ``ref`` supplies a dataframe-QUALIFIED column
     for join conditions where a bare F.col(name) would be ambiguous."""
     dt = df.schema[col].dataType.typeName()
-    c = ref if ref is not None else _qc(col)
+    c = ref if ref is not None else qcol(col)
     if dt.startswith("timestamp"):
         return (F.unix_micros(c.cast("timestamp")) / F.lit(1e6))
     return c.cast("double")
-
-
-def _qc(name: str) -> Column:
-    """F.col with the name QUOTED: F.col/partitionBy/groupBy/select all
-    PARSE bare strings, so a dot or backtick in a user column name is a
-    struct access or a syntax error (r13 hostile-name sweep — the r12
-    hardening covered core/dataframe.py; this extends it to the
-    time-series family)."""
-    from ..core import colutils
-    return F.col(colutils.quote(name))
-
-
-def _qcs(names) -> list:
-    return [_qc(n) for n in names]
 
 
 _MAX_BUCKET = (1 << 63) - 1
@@ -79,6 +107,27 @@ def _time_bucket(t, span: float):
     the in-bucket (t, ...) order stays exact."""
     return F.when(F.isnan(t), F.lit(_MAX_BUCKET)).otherwise(
         F.floor(t / F.lit(float(span))))
+
+
+def _span(op: str, time_buckets_sec) -> float | None:
+    """``time_buckets_sec`` validated as a float bucket span (None = the
+    plain single-window plan)."""
+    if time_buckets_sec is None:
+        return None
+    if time_buckets_sec <= 0:
+        raise ValueError(f"{op}: time_buckets_sec must be positive")
+    return float(time_buckets_sec)
+
+
+def _bucket(d, keys, t_col: str, span: float):
+    """Phase 1 of the bucketed skeleton (module docstring): ``d`` plus
+    its ``__b__`` time-bucket column, the local (key, bucket) partition
+    spec, and the per-key bucket-order window for the summary frame —
+    NULL bucket first, where NULL times sort in the plain window."""
+    return (d.withColumn("__b__", _time_bucket(F.col(t_col), span)),
+            Window.partitionBy(*map(qcol, keys), "__b__"),
+            Window.partitionBy(*map(qcol, keys))
+            .orderBy(F.col("__b__").asc_nulls_first()))
 
 
 def asof_join(left, right, on: list[str] | str, left_time: str,
@@ -118,70 +167,92 @@ def asof_join(left, right, on: list[str] | str, left_time: str,
     fix — per-column carries used to backfill such a cell from an
     EARLIER right row, tearing the result across two source rows).
 
-    ``time_buckets_sec`` (r12, hot-key scale path — same straggler as
-    sessionize/rolling: the carry window partitioned by a skewed key
-    is ONE task, the shuffle-skew class AQE cannot split): the carry
-    runs inside (key, time-bucket) partitions; each bucket's LAST
-    right row (struct + match time, max (t, tiebreaks) — the same
-    winner the window would pick) aggregates into a per-bucket
-    summary, a tiny per-key running carry propagates it across bucket
-    boundaries, and one null-safe join feeds it back as the carry-in
-    for rows with no in-bucket match. Exact — identical to the
-    single-window plan (equal times share a bucket, so tie semantics
-    are untouched; property-tested). ``hot_key_rows`` (default
-    ``"auto"`` = 262,144) routes only hot keys through it, censusing
-    the COMBINED left+right rows per key so an as-of pair never splits
-    across plans. 'nearest' runs the same bucketed carry in both
-    directions before its pick. Without ``time_buckets_sec`` the
-    threshold instead arms the zero-extra-job hot-key warning on the
-    single-window carry (r15 — see sessionize)."""
+    ``time_buckets_sec`` runs the carry on the bucketed skeleton (module
+    docstring): each bucket's LAST right row (struct + match time, max
+    (t, tiebreaks) — the same winner the window would pick) is the
+    bucket summary, a per-key running carry propagates it across bucket
+    boundaries, and it feeds rows with no in-bucket match. Hot/cold
+    routing censuses the COMBINED left+right rows per key, so an as-of
+    pair never splits across plans. 'nearest' runs the same bucketed
+    carry in both directions before its pick."""
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"asof_join: unknown direction: {direction}")
     ldf, rdf = _df(left), _df(right)
-    keys = [on] if isinstance(on, str) else list(on)
-    rt = right_time or left_time
+    keys = as_list(on)
+    span = _span("asof_join", time_buckets_sec)
 
-    if time_buckets_sec is not None and time_buckets_sec <= 0:
-        raise ValueError("asof_join: time_buckets_sec must be positive")
-    if time_buckets_sec is not None and hot_key_rows is not None:
-        thr = (AUTO_HOT_KEY_ROWS if hot_key_rows == "auto"
-               else int(hot_key_rows))
-        combined = ldf.select(*_qcs(keys)).unionByName(rdf.select(*_qcs(keys)))
-        hk = _hot_keys_census(combined, keys, thr)
-        l_hot, l_cold = _hot_key_split(ldf, keys, thr, hot_keys=hk)
-        r_hot, r_cold = _hot_key_split(rdf, keys, thr, hot_keys=hk)
-        hot_out = asof_join(OmigoDF(l_hot), OmigoDF(r_hot), on, left_time,
-                            right_time, suffix, tolerance_sec, direction,
-                            tiebreak_cols, time_buckets_sec,
-                            hot_key_rows=None)
-        cold_out = asof_join(OmigoDF(l_cold), OmigoDF(r_cold), on,
-                             left_time, right_time, suffix, tolerance_sec,
-                             direction, tiebreak_cols,
-                             time_buckets_sec=None)
-        return OmigoDF(hot_out.df.unionByName(cold_out.df))
-    if direction == "nearest":
-        return _asof_nearest(left, right, on, left_time, right_time,
-                             suffix, tolerance_sec, tiebreak_cols,
-                             time_buckets_sec)
+    if span is not None and hot_key_rows is not None:
+        return _route_hot_keys(
+            [ldf, rdf], keys, hot_key_rows, span,
+            lambda fs, **plan: asof_join(
+                OmigoDF(fs[0]), OmigoDF(fs[1]), on, left_time, right_time,
+                suffix, tolerance_sec, direction, tiebreak_cols, **plan))
 
     r_payload = [c for c in rdf.columns if c not in keys]
-    out_names = {c: f"{suffix}:{c}" for c in r_payload}
+    # validate tiebreak_cols BEFORE the empty-payload early return (r12
+    # advice): bad input raises even when there is nothing to carry
     tb = _asof_tiebreak(tiebreak_cols, r_payload)
 
     # degenerate: right has no payload beyond the keys — nothing to carry
     if not r_payload:
         return OmigoDF(ldf)
 
-    # align schemas: one unioned relation with a side tag; forward as-of
-    # is backward as-of on negated time. The WHOLE right payload rides
-    # one struct column so the carry below picks a single right row
-    # atomically — a non-NULL struct with NULL fields is still non-NULL,
-    # so last(ignorenulls) never mixes cells from different right rows.
-    pay_struct = F.struct(*[_qc(c).alias(c) for c in r_payload])
-    sign = F.lit(1.0) if direction == "backward" else F.lit(-1.0)
+    # forward as-of is backward as-of on negated time; nearest runs both
+    # directional carries over the plain time
+    sign = {"backward": 1.0, "forward": -1.0}.get(direction)
+    u = _asof_union(ldf, rdf, keys, left_time, right_time or left_time,
+                    r_payload, sign)
+
+    # tiebreak cols order AFTER (__t__, __side__): they only order right
+    # rows among themselves (left rows carry NULL payload and sort as a
+    # block behind the side tag), so the inclusive same-time semantics
+    # are untouched; last() then deterministically picks the max tuple
+    if direction == "nearest":
+        out, payload = _asof_nearest(u, keys, tb, tolerance_sec, span)
+    else:
+        if span is not None:
+            carried = _asof_carry_bucketed(u, keys, tb, span)
+        else:
+            w_base = Window.partitionBy(*map(qcol, keys)).orderBy(
+                "__t__", "__side__", *tb)
+            w = w_base.rowsBetween(Window.unboundedPreceding,
+                                   Window.currentRow)
+            carried = u.select(
+                "*",
+                F.last("__r__", ignorenulls=True).over(w).alias("__c__"),
+                F.last(F.when(F.col("__side__") == 0, F.col("__t__")),
+                       ignorenulls=True).over(w).alias("__match_t__"))
+            carried = _watch_hot_keys(carried, w_base, "asof_join",
+                                      hot_key_rows)
+        out = carried.where(F.col("__side__") == 1)
+        if tolerance_sec is not None:
+            keep = (F.col("__match_t__")
+                    >= F.col("__t__") - F.lit(tolerance_sec))
+            out = out.withColumn("__c__", F.when(keep, F.col("__c__")))
+        payload = F.col("__c__")
+    proj = keys + [c for c in ldf.columns if c not in keys]
+    return OmigoDF(out.select(
+        *map(qcol, proj),
+        *[payload.getField(c).alias(f"{suffix}:{c}") for c in r_payload]))
+
+
+def _asof_union(ldf, rdf, keys, left_time, right_time, r_payload,
+                sign: float | None = None):
+    """The as-of carry's input: left rows tagged ``__side__`` 1 with a
+    NULL payload and right rows tagged 0, unioned by name, with the time
+    as epoch seconds (times ``sign`` when given) in ``__t__``. The WHOLE
+    right payload rides one struct column ``__r__`` so a carry picks a
+    single right row atomically — a non-NULL struct with NULL fields is
+    still non-NULL, so last(ignorenulls) never mixes cells from
+    different right rows (r11)."""
+    pay_struct = F.struct(*[qcol(c).alias(c) for c in r_payload])
     r_typed = rdf.select(pay_struct.alias("__r__")).schema["__r__"].dataType
-    l_tagged = (ldf
-                .withColumn("__t__", sign * _epoch_sec(ldf, left_time))
+
+    def _t(df, col):
+        t = _epoch_sec(df, col)
+        return t if sign is None else F.lit(sign) * t
+
+    l_tagged = (ldf.withColumn("__t__", _t(ldf, left_time))
                 .withColumn("__side__", F.lit(1))
                 .withColumn("__r__", F.lit(None).cast(r_typed)))
     # NULL-time right rows sort FIRST under the window's ascending order
@@ -189,8 +260,7 @@ def asof_join(left, right, on: list[str] | str, left_time: str,
     # row with no earlier real match — a phantom match whose __match_t__
     # is NULL (r10 review, confirmed both directions). They can never be
     # a legitimate as-of match; drop them before the union.
-    r_tagged = (rdf
-                .withColumn("__t__", sign * _epoch_sec(rdf, rt))
+    r_tagged = (rdf.withColumn("__t__", _t(rdf, right_time))
                 .where(F.col("__t__").isNotNull())
                 .withColumn("__side__", F.lit(0))
                 .withColumn("__r__", pay_struct))
@@ -200,38 +270,8 @@ def asof_join(left, right, on: list[str] | str, left_time: str,
                 c, F.lit(None).cast(ldf.schema[c].dataType))
     cols = keys + ["__t__", "__side__", "__r__"] \
         + [c for c in ldf.columns if c not in keys]
-    u = (l_tagged.select(*[_qc(c) for c in cols])
-         .unionByName(r_tagged.select(*[_qc(c) for c in cols])))
-
-    # tiebreak cols order AFTER (__t__, __side__): they only order right
-    # rows among themselves (left rows carry NULL payload and sort as a
-    # block behind the side tag), so the inclusive same-time semantics
-    # are untouched; last() then deterministically picks the max tuple
-    if time_buckets_sec is not None:
-        carried = _asof_carry_bucketed(u, keys, tb,
-                                       float(time_buckets_sec))
-    else:
-        w_base = Window.partitionBy(*_qcs(keys)).orderBy("__t__",
-                                                         "__side__", *tb)
-        w = w_base.rowsBetween(Window.unboundedPreceding,
-                               Window.currentRow)
-        carried = u.select(
-            "*",
-            F.last("__r__", ignorenulls=True).over(w).alias("__c__"),
-            F.last(F.when(F.col("__side__") == 0, F.col("__t__")),
-                   ignorenulls=True).over(w).alias("__match_t__"))
-        carried = _watch_hot_keys(carried, w_base, "asof_join",
-                                  hot_key_rows)
-
-    out = carried.where(F.col("__side__") == 1)
-    if tolerance_sec is not None:
-        keep = F.col("__match_t__") >= F.col("__t__") - F.lit(tolerance_sec)
-        out = out.withColumn("__c__", F.when(keep, F.col("__c__")))
-    proj = keys + [c for c in ldf.columns if c not in keys]
-    out = out.select(
-        *[_qc(c) for c in proj],
-        *[F.col("__c__").getField(c).alias(out_names[c]) for c in r_payload])
-    return OmigoDF(out)
+    return (l_tagged.select(*map(qcol, cols))
+            .unionByName(r_tagged.select(*map(qcol, cols))))
 
 
 def _asof_carry_bucketed(u, keys, tb, span: float,
@@ -248,11 +288,8 @@ def _asof_carry_bucketed(u, keys, tb, span: float,
     single-window carry. NULL-time left rows land in the NULL bucket,
     which sorts FIRST (no carry-in) — the same nothing-precedes-them
     the NULLS-FIRST window gives."""
-    from ..core import colutils
-
-    u2 = u.withColumn("__b__", _time_bucket(F.col("__t__"), span))
-    wl = (Window.partitionBy(*_qcs(keys), "__b__")
-          .orderBy("__t__", "__side__", *tb)
+    u2, by_bucket, bucket_order = _bucket(u, keys, "__t__", span)
+    wl = (by_bucket.orderBy("__t__", "__side__", *tb)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     local = u2.select(
         "*",
@@ -262,42 +299,28 @@ def _asof_carry_bucketed(u, keys, tb, span: float,
     # per-bucket final right row: max (t, tiebreaks) among right rows —
     # max_by over a lexicographic struct = the window's last() pick
     summ = (u2.where(F.col("__side__") == 0)
-            .groupBy(*_qcs(keys), "__b__")
+            .groupBy(*map(qcol, keys), "__b__")
             .agg(F.max_by(F.col("__r__"),
                           F.struct(F.col("__t__"), *tb)).alias("__lr__"),
                  F.max("__t__").alias("__lt__")))
-    buckets = u2.select(*_qcs(keys), "__b__").distinct()
-
-    def _q(side, c):
-        return F.col(side + "." + colutils.quote(c))
-
-    bl = buckets.alias("__bl__")
-    br = summ.alias("__br__")
-    cond = [_q("__bl__", c).eqNullSafe(_q("__br__", c))
-            for c in keys + ["__b__"]]
-    bf = bl.join(br, on=cond, how="left").select(
-        *[_q("__bl__", c).alias(c) for c in keys + ["__b__"]],
-        _q("__br__", "__lr__").alias("__lr__"),
-        _q("__br__", "__lt__").alias("__lt__"))
-    wb = (Window.partitionBy(*_qcs(keys))
-          .orderBy(F.col("__b__").asc_nulls_first())
-          .rowsBetween(Window.unboundedPreceding, -1))
+    buckets = u2.select(*map(qcol, keys), "__b__").distinct()
+    kb = keys + ["__b__"]
+    bf = key_join(buckets, summ, kb, "left").select(
+        *[qref(_L, c).alias(c) for c in kb],
+        qref(_R, "__lr__").alias("__lr__"),
+        qref(_R, "__lt__").alias("__lt__"))
+    wb = bucket_order.rowsBetween(Window.unboundedPreceding, -1)
     carry = bf.select(
-        *_qcs(keys), "__b__",
+        *map(qcol, keys), "__b__",
         F.last("__lr__", ignorenulls=True).over(wb).alias("__cin__"),
         F.last("__lt__", ignorenulls=True).over(wb).alias("__cint__"))
-    ll = local.alias("__cl__")
-    cr = carry.alias("__cr__")
-    cond2 = [_q("__cl__", c).eqNullSafe(_q("__cr__", c))
-             for c in keys + ["__b__"]]
     keep = [c for c in local.columns if c not in ("__lc__", "__lmt__")]
-    return (ll.join(cr, on=cond2, how="inner")
-            .select(*[_q("__cl__", c).alias(c) for c in keep],
-                    F.coalesce(_q("__cl__", "__lc__"),
-                               _q("__cr__", "__cin__")).alias(out_c),
-                    F.coalesce(_q("__cl__", "__lmt__"),
-                               _q("__cr__", "__cint__"))
-                    .alias(out_mt))
+    return (key_join(local, carry, kb)
+            .select(*[qref(_L, c).alias(c) for c in keep],
+                    F.coalesce(qref(_L, "__lc__"),
+                               qref(_R, "__cin__")).alias(out_c),
+                    F.coalesce(qref(_L, "__lmt__"),
+                               qref(_R, "__cint__")).alias(out_mt))
             .drop("__b__"))
 
 
@@ -316,59 +339,24 @@ def _asof_tiebreak(tiebreak_cols, r_payload):
     return [F.col("__r__").getField(c) for c in tiebreak_cols]
 
 
-def _asof_nearest(left, right, on, left_time, right_time, suffix,
-                  tolerance_sec, tiebreak_cols=None,
-                  time_buckets_sec=None) -> OmigoDF:
-    """Nearest-match as-of: both directional carries over ONE union —
-    the backward and forward windows share the hash partitioning (one
-    Exchange, two Sorts) — then a map-side pick of the closer match
-    (ties prefer the backward/earlier row, pandas merge_asof style).
+def _asof_nearest(u, keys, tb, tolerance_sec, span=None):
+    """Nearest-match as-of over the unsigned union ``u``: both
+    directional carries over ONE union — the backward and forward
+    windows share the hash partitioning (one Exchange, two Sorts) — then
+    a map-side pick of the closer match (ties prefer the backward/earlier
+    row, pandas merge_asof style). Returns (left rows, picked payload
+    struct column).
 
-    With ``time_buckets_sec`` the two carries each run through the
+    With a bucket ``span`` the two carries each run through the
     bucketed plan (_asof_carry_bucketed): the forward carry is the
     backward carry on NEGATED time — (-t asc, side, tb) is exactly the
     (t desc, side, tb) window order, and max_by over the negated
     struct picks the same winner — so one helper serves both; the pick
-    logic is unchanged."""
-    ldf, rdf = _df(left), _df(right)
-    keys = [on] if isinstance(on, str) else list(on)
-    rt = right_time or left_time
-    r_payload = [c for c in rdf.columns if c not in keys]
-    # validate tiebreak_cols BEFORE the empty-payload early return (r12
-    # advice): asof_join's backward/forward path raises ValueError on
-    # invalid tiebreak_cols even when there is nothing to carry, and
-    # nearest must not silently accept the same bad input
-    tb = _asof_tiebreak(tiebreak_cols, r_payload)
-    if not r_payload:
-        return OmigoDF(ldf)
-
-    # same atomic struct carry as asof_join (r11 advice fix): one
-    # last(ignorenulls) per DIRECTION picks a whole right row, so NULL
-    # payload cells in the winning row are never backfilled from an
-    # earlier right row
-    pay_struct = F.struct(*[_qc(c).alias(c) for c in r_payload])
-    r_typed = rdf.select(pay_struct.alias("__r__")).schema["__r__"].dataType
-    l_tagged = (ldf.withColumn("__t__", _epoch_sec(ldf, left_time))
-                .withColumn("__side__", F.lit(1))
-                .withColumn("__r__", F.lit(None).cast(r_typed)))
-    # same NULL-time right-row screen as asof_join (there the leak was
-    # a phantom match; here the pick logic already masked it, but the
-    # rows still rode the shuffle for nothing)
-    r_tagged = (rdf.withColumn("__t__", _epoch_sec(rdf, rt))
-                .where(F.col("__t__").isNotNull())
-                .withColumn("__side__", F.lit(0))
-                .withColumn("__r__", pay_struct))
-    for c in ldf.columns:
-        if c not in r_tagged.columns:
-            r_tagged = r_tagged.withColumn(
-                c, F.lit(None).cast(ldf.schema[c].dataType))
-    cols = keys + ["__t__", "__side__", "__r__"] \
-        + [c for c in ldf.columns if c not in keys]
-    u = (l_tagged.select(*[_qc(c) for c in cols])
-         .unionByName(r_tagged.select(*[_qc(c) for c in cols])))
-
-    if time_buckets_sec is not None:
-        span = float(time_buckets_sec)
+    logic is unchanged. The NULL-time right-row screen of the union
+    matters less here than for the directional carry (the pick logic
+    already masks a phantom match), but those rows would still ride the
+    shuffle for nothing."""
+    if span is not None:
         c1 = _asof_carry_bucketed(u, keys, tb, span,
                                   out_c="__bk__", out_mt="__bkt__")
         c1n = c1.withColumn("__t__", -F.col("__t__"))
@@ -387,10 +375,10 @@ def _asof_nearest(left, right, on, left_time, right_time, suffix,
         # tiebreak ASC in BOTH windows: among equal-time right rows,
         # last() picks the max tiebreak tuple in each direction, so the
         # backward and forward carries agree on the winner of a tie
-        wb = (Window.partitionBy(*_qcs(keys))
+        wb = (Window.partitionBy(*map(qcol, keys))
               .orderBy("__t__", "__side__", *tb)
               .rowsBetween(*frame))
-        wf = (Window.partitionBy(*_qcs(keys))
+        wf = (Window.partitionBy(*map(qcol, keys))
               .orderBy(F.col("__t__").desc(), "__side__", *tb)
               .rowsBetween(*frame))
         sel = ["*",
@@ -417,12 +405,7 @@ def _asof_nearest(left, right, on, left_time, right_time, suffix,
         b_ok = t_ok & F.col("__bt__").isNotNull()
         f_ok = t_ok & F.col("__ft__").isNotNull()
     use_b = b_ok & (~f_ok | (bd <= fd))   # tie -> backward
-    proj = keys + [c for c in ldf.columns if c not in keys]
-    pick = F.when(use_b, F.col("__b__")).when(f_ok, F.col("__f__"))
-    out = carried.select(
-        *[_qc(c) for c in proj],
-        *[pick.getField(c).alias(f"{suffix}:{c}") for c in r_payload])
-    return OmigoDF(out)
+    return carried, F.when(use_b, F.col("__b__")).when(f_ok, F.col("__f__"))
 
 
 def range_join(points, intervals, point_col: str, start_col: str,
@@ -464,11 +447,6 @@ def range_join(points, intervals, point_col: str, start_col: str,
     # alias-qualified QUOTED refs, not the bracket accessor (p[k] PARSES
     # the name — a dot or backtick in a user column breaks; r13
     # hostile-name sweep)
-    from ..core import colutils
-
-    def _q(side, c):
-        return F.col(side + "." + colutils.quote(c))
-
     p = pdf.withColumn(
         "__bin__", F.floor(_epoch_sec(pdf, point_col) / bin_width)) \
         .alias("__rp__")
@@ -479,17 +457,17 @@ def range_join(points, intervals, point_col: str, start_col: str,
             F.floor(_epoch_sec(idf, end_col) / bin_width)))) \
         .alias("__ri__")
 
-    cond = [_q("__rp__", "__bin__") == _q("__ri__", "__bin__")]
+    cond = [qref("__rp__", "__bin__") == qref("__ri__", "__bin__")]
     for k in keys:
-        cond.append(_q("__rp__", k) == _q("__ri__", k))
-    pt = _epoch_sec(pdf, point_col, _q("__rp__", point_col))
-    cond.append(pt >= _epoch_sec(idf, start_col, _q("__ri__", start_col)))
-    cond.append(pt <= _epoch_sec(idf, end_col, _q("__ri__", end_col)))
+        cond.append(qref("__rp__", k) == qref("__ri__", k))
+    pt = _epoch_sec(pdf, point_col, qref("__rp__", point_col))
+    cond.append(pt >= _epoch_sec(idf, start_col, qref("__ri__", start_col)))
+    cond.append(pt <= _epoch_sec(idf, end_col, qref("__ri__", end_col)))
     joined = p.join(i, cond, how)
     dup = set(keys) | {"__bin__"}
     out = joined.select(
-        *[_q("__rp__", c).alias(c) for c in pdf.columns],
-        *[_q("__ri__", c).alias(c) for c in idf.columns if c not in dup])
+        *[qref("__rp__", c).alias(c) for c in pdf.columns],
+        *[qref("__ri__", c).alias(c) for c in idf.columns if c not in dup])
     return OmigoDF(out)
 
 
@@ -501,6 +479,29 @@ AUTO_HOT_KEY_ROWS = 262_144
 # bypasses AQE's size check and can OOM the driver — is withheld and AQE
 # decides from the materialized size (r12 advice).
 BROADCAST_HINT_MIN_THRESHOLD = 1024
+
+
+def _hot_key_threshold(hot_key_rows) -> int:
+    if hot_key_rows == "auto":
+        return AUTO_HOT_KEY_ROWS
+    return int(hot_key_rows)
+
+
+def _route_hot_keys(frames, keys, hot_key_rows, span: float, run) -> OmigoDF:
+    """Hot/cold routing (module docstring): ONE key census — over the
+    single input, or over the union of every frame's key columns so an
+    as-of pair never splits across plans — splits each frame by the same
+    hot-key set; ``run(frames, **plan)`` builds the bucketed plan on the
+    hot rows and the plain plan on the cold rows, and the two union."""
+    thr = _hot_key_threshold(hot_key_rows)
+    census = frames[0] if len(frames) == 1 else reduce(
+        DataFrame.unionByName, [f.select(*map(qcol, keys)) for f in frames])
+    hk = _hot_keys_census(census, keys, thr)
+    hot, cold = zip(*[_hot_key_split(f, keys, thr, hot_keys=hk)
+                      for f in frames])
+    hot_out = run(hot, time_buckets_sec=span, hot_key_rows=None)
+    cold_out = run(cold, time_buckets_sec=None)
+    return OmigoDF(hot_out.df.unionByName(cold_out.df))
 
 
 def _watch_hot_keys(df, w_base, op_name: str, hot_key_rows):
@@ -515,8 +516,7 @@ def _watch_hot_keys(df, w_base, op_name: str, hot_key_rows):
     the bucketed path: no hot/cold routing)."""
     if hot_key_rows is None:
         return df
-    thr = (AUTO_HOT_KEY_ROWS if hot_key_rows == "auto"
-           else int(hot_key_rows))
+    thr = _hot_key_threshold(hot_key_rows)
 
     def _cb(m):
         mx = m.get("max_key_rows")
@@ -548,17 +548,12 @@ def _hot_key_split(d, keys, threshold: int, hot_keys=None):
     callers with an expensive upstream plan (not a plain scan) should
     persist/localCheckpoint it before routing; the census itself is
     localCheckpointed so its aggregation runs exactly once."""
-    from ..core import colutils
     if hot_keys is None:
         hot_keys = _hot_keys_census(d, keys, threshold)
-    dl = d.alias("__dd__")
-    hk = hot_keys.alias("__hk__")
     if threshold >= BROADCAST_HINT_MIN_THRESHOLD:
-        hk = F.broadcast(hk)
-    cond = [F.col("__dd__." + colutils.quote(c)).eqNullSafe(
-        F.col("__hk__." + colutils.quote(c))) for c in keys]
-    return dl.join(hk, on=cond, how="left_semi"), \
-        dl.join(hk, on=cond, how="left_anti")
+        hot_keys = F.broadcast(hot_keys)
+    return (key_join(d, hot_keys, keys, "left_semi"),
+            key_join(d, hot_keys, keys, "left_anti"))
 
 
 def _hot_keys_census(d, keys, threshold: int):
@@ -571,9 +566,10 @@ def _hot_keys_census(d, keys, threshold: int):
     # consistently slower (+5..+14%) in clean-box isolated A/B than
     # materializing once up front; the construct-time job it costs is
     # census-sized, not input-sized.
-    return (d.groupBy(*_qcs(keys)).agg(F.count(F.lit(1)).alias("__kc__"))
+    return (d.groupBy(*map(qcol, keys))
+            .agg(F.count(F.lit(1)).alias("__kc__"))
             .where(F.col("__kc__") >= F.lit(int(threshold)))
-            .select(*_qcs(keys))
+            .select(*map(qcol, keys))
             .localCheckpoint())
 
 
@@ -587,38 +583,18 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
     Adds ``{session_col}`` (1-based per key) — one shuffle on the key,
     both window functions share the same sort order.
 
-    ``time_buckets_sec`` (r12, the hot-key scale path): a window
-    partitioned by a SKEWED key puts the whole hot group in ONE task —
-    the one shuffle-skew class AQE cannot split (measured 2.1× at 30%
-    skew on the r12 skew probe; at 100 TB the hot key is a straggler
-    that never finishes). Passing a bucket span switches to an exact
-    two-phase plan: (1) sessionize WITHIN (key, time-bucket) windows —
-    parallelism = buckets per key, so the hot key spreads over
-    span/bucket tasks; (2) a per-(key, bucket) summary (first/last
-    event time, local session count) merges sessions across bucket
-    boundaries on a bucket-counted frame orders of magnitude smaller
-    than the data; (3) one join back on (key, bucket) — which reuses
-    the phase-1 exchange, so the big side never reshuffles. The result
-    is IDENTICAL to the single-window plan (property-tested, including
-    NULL times and boundary-straddling sessions); pick a span well
-    above ``gap_sec`` so most sessions close within one bucket.
-
-    ``hot_key_rows`` routes ONLY hot keys through the bucketed plan
-    (default ``"auto"`` = 262,144 rows): a one-pass key census splits
-    the input, cold keys take the plain single-window plan (their
-    partitions are small — bucketing them is pure overhead and, for
-    rolling, trips the density guard), hot keys take the two-phase
-    plan, results union. ``None`` buckets every key; an int pins the
-    threshold. Without ``time_buckets_sec`` the same threshold instead
-    arms a zero-extra-job hot-key WARNING on the single-window plan
-    (r15): a row counter rides the existing window pass, its max rides
-    the caller's first action as an observe() metric, and a key group
-    at/over the threshold warns asynchronously naming
-    ``time_buckets_sec`` as the remedy (``None`` disables)."""
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    ``time_buckets_sec`` runs it on the bucketed skeleton (module
+    docstring): sessions are numbered WITHIN (key, time-bucket) windows,
+    and a per-(key, bucket) summary (first/last event time, local
+    session count) merges sessions across bucket boundaries. Pick a span
+    well above ``gap_sec`` so most sessions close within one bucket.
+    ``hot_key_rows`` routes only hot keys through it, or arms the
+    hot-key warning on the single-window plan."""
+    keys = as_list(key_cols)
     d = _df(odf)
+    span = _span("sessionize", time_buckets_sec)
     t: Column = _epoch_sec(d, time_col)
-    if time_buckets_sec is None:
+    if span is None:
         # the order key is MATERIALIZED as a column before the windows
         # (r15): ordering by the raw epoch-cast EXPRESSION gave every
         # Window node its own internal `_w0` projection, so the lag,
@@ -627,7 +603,7 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
         # Over a real column the specs share attributes: one Sort, the
         # counter fuses into the running-sum Window (CollapseWindow),
         # and the values — hence results — are identical.
-        w = Window.partitionBy(*_qcs(keys)).orderBy("__ot__")
+        w = Window.partitionBy(*map(qcol, keys)).orderBy("__ot__")
         ot = F.col("__ot__")
         is_break = (ot - F.lag(ot).over(w) > F.lit(gap_sec)).cast("bigint")
         out = (d.withColumn("__ot__", t)
@@ -638,36 +614,27 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
                                              Window.currentRow)) + 1)))
         out = _watch_hot_keys(out, w, "sessionize", hot_key_rows)
         return OmigoDF(out.drop("__brk__", "__ot__"))
-    if time_buckets_sec <= 0:
-        raise ValueError("sessionize: time_buckets_sec must be positive")
     if hot_key_rows is not None:
-        thr = AUTO_HOT_KEY_ROWS if hot_key_rows == "auto" else int(hot_key_rows)
-        hot, cold = _hot_key_split(d, keys, thr)
-        hot_out = sessionize(OmigoDF(hot), keys, time_col, gap_sec,
-                             session_col, time_buckets_sec,
-                             hot_key_rows=None)
-        cold_out = sessionize(OmigoDF(cold), keys, time_col, gap_sec,
-                              session_col, time_buckets_sec=None)
-        return OmigoDF(hot_out.df.unionByName(cold_out.df))
+        return _route_hot_keys(
+            [d], keys, hot_key_rows, span,
+            lambda fs, **plan: sessionize(OmigoDF(fs[0]), keys, time_col,
+                                          gap_sec, session_col, **plan))
     cols = list(d.columns)
     # NULL times bucket to NULL, which sorts FIRST over the bucket
     # order exactly as NULL t sorts first in the single-window plan;
     # their NULL boundary gaps read as "continue" in both plans.
-    d2 = (d.withColumn("__t__", t)
-          .withColumn("__b__", _time_bucket(F.col("__t__"),
-                                           float(time_buckets_sec))))
-    wl = Window.partitionBy(*_qcs(keys), "__b__").orderBy("__t__")
+    d2, by_bucket, ws = _bucket(d.withColumn("__t__", t), keys, "__t__", span)
+    wl = by_bucket.orderBy("__t__")
     brk = (F.col("__t__") - F.lag("__t__").over(wl)
            > F.lit(gap_sec)).cast("bigint")
     local = (d2.withColumn("__brk__", F.coalesce(brk, F.lit(0)))
              .withColumn("__lid__", F.sum("__brk__").over(
                  wl.rowsBetween(Window.unboundedPreceding,
                                 Window.currentRow)) + 1))
-    summ = (local.groupBy(*_qcs(keys), "__b__")
+    summ = (local.groupBy(*map(qcol, keys), "__b__")
             .agg(F.min("__t__").alias("__ft__"),
                  F.max("__t__").alias("__lt__"),
                  F.max("__lid__").alias("__ns__")))
-    ws = Window.partitionBy(*_qcs(keys)).orderBy(F.col("__b__").asc_nulls_first())
     has_prev = F.lag(F.lit(1)).over(ws).isNotNull()
     # boundary gap NULL (either side's time NULL) = continue, matching
     # the single-window plan's NULL-gap-is-not-a-break rule
@@ -679,24 +646,11 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
                 F.sum(F.col("__ns__") - F.col("__mrg__")).over(
                     ws.rowsBetween(Window.unboundedPreceding, -1)),
                 F.lit(0))))
-    # null-safe aliased join back: plain `on=` equality would DROP the
-    # NULL-key / NULL-bucket groups the single-window plan keeps, and
-    # summ derives from local so bare column refs would be ambiguous
-    from ..core import colutils
-    lhs = local.alias("__sl__")
-    rhs = summ.select(*_qcs(keys), "__b__", "__mrg__", "__P__").alias("__sr__")
-
-    def _q(side, c):
-        return F.col(side + "." + colutils.quote(c))
-
-    cond = [_q("__sl__", c).eqNullSafe(_q("__sr__", c))
-            for c in keys + ["__b__"]]
-    joined = lhs.join(rhs, on=cond, how="inner")
-    out = joined.withColumn(
-        session_col,
-        _q("__sr__", "__P__") + _q("__sl__", "__lid__")
-        - _q("__sr__", "__mrg__")) \
-        .select(*[_q("__sl__", c).alias(c) for c in cols], _qc(session_col))
+    rhs = summ.select(*map(qcol, keys), "__b__", "__mrg__", "__P__")
+    out = (key_join(local, rhs, keys + ["__b__"])
+           .withColumn(session_col, qref(_R, "__P__") + qref(_L, "__lid__")
+                       - qref(_R, "__mrg__"))
+           .select(*[qref(_L, c).alias(c) for c in cols], qcol(session_col)))
     return OmigoDF(out)
 
 
@@ -722,11 +676,8 @@ def rolling_aggregate(odf, key_cols: list[str] | str, order_col: str,
     order per key — when ``(key, order_col)`` can repeat; with the
     default None the caller asserts the order is already total.
 
-    ``time_buckets_sec`` (r12, the hot-key scale path — same hazard as
-    sessionize: a window partitioned by a skewed key is ONE task, the
-    shuffle-skew class AQE cannot split; measured 2.4× at 30% skew on
-    the r12 skew probe). Passing a bucket span runs the window inside
-    (key, time-bucket) partitions with a HALO: the last
+    ``time_buckets_sec`` runs it on the bucketed skeleton (module
+    docstring), with a HALO as the carry: the last
     ``window_rows - 1`` rows of each bucket are replicated into the
     key's NEXT non-empty bucket (successor by per-key bucket order, so
     empty buckets cannot break the chain), the frame is computed over
@@ -736,43 +687,28 @@ def rolling_aggregate(odf, key_cols: list[str] | str, order_col: str,
     cheap summary check enforces (raises with the pick-a-bigger-span
     remedy otherwise; a boundary row would silently miss predecessors
     two buckets back). Ties never straddle buckets (equal times share
-    a bucket), so the tiebreak contract is unchanged.
-
-    ``hot_key_rows`` (default ``"auto"`` = 262,144 rows) routes only
-    hot keys through the halo plan via a one-pass key census — cold
-    keys' partitions are small (no straggler to fix) and their sparse
-    buckets would trip the density guard; they keep the single-window
-    plan, and the two results union. ``None`` buckets every key.
-    Without ``time_buckets_sec`` the threshold instead arms the
-    zero-extra-job hot-key warning on the single-window plan (r15 —
-    see sessionize)."""
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    a bucket), so the tiebreak contract is unchanged. Hot/cold routing
+    also keeps the sparse buckets of cold keys away from that guard.
+    ``hot_key_rows`` routes only hot keys through it, or arms the
+    hot-key warning on the single-window plan."""
+    keys = as_list(key_cols)
     d = _df(odf)
-    if time_buckets_sec is not None:
-        if time_buckets_sec <= 0:
-            raise ValueError("rolling_aggregate: time_buckets_sec must "
-                             "be positive")
+    span = _span("rolling_aggregate", time_buckets_sec)
+    if span is not None:
         if hot_key_rows is not None:
-            thr = (AUTO_HOT_KEY_ROWS if hot_key_rows == "auto"
-                   else int(hot_key_rows))
-            hot, cold = _hot_key_split(d, keys, thr)
-            hot_out = rolling_aggregate(
-                OmigoDF(hot), keys, order_col, agg_cols, agg_funcs,
-                window_rows, precision, tiebreak_cols,
-                time_buckets_sec, hot_key_rows=None)
-            cold_out = rolling_aggregate(
-                OmigoDF(cold), keys, order_col, agg_cols, agg_funcs,
-                window_rows, precision, tiebreak_cols,
-                time_buckets_sec=None)
-            return OmigoDF(hot_out.df.unionByName(cold_out.df))
+            return _route_hot_keys(
+                [d], keys, hot_key_rows, span,
+                lambda fs, **plan: rolling_aggregate(
+                    OmigoDF(fs[0]), keys, order_col, agg_cols, agg_funcs,
+                    window_rows, precision, tiebreak_cols, **plan))
         return _rolling_bucketed(d, keys, order_col, agg_cols, agg_funcs,
                                  window_rows, precision, tiebreak_cols,
-                                 float(time_buckets_sec))
+                                 span)
     # order key materialized as a column (r15, see sessionize): an
     # expression orderBy denies Sort sharing and Window collapse, so
     # the hot-key counter would pay its own Sort + Window pass
-    order = [F.col("__ot__")] + [_qc(c) for c in (tiebreak_cols or [])]
-    w_base = Window.partitionBy(*_qcs(keys)).orderBy(*order)
+    order = [F.col("__ot__")] + [qcol(c) for c in (tiebreak_cols or [])]
+    w_base = Window.partitionBy(*map(qcol, keys)).orderBy(*order)
     w = w_base.rowsBetween(-(window_rows - 1), Window.currentRow)
     out = d.withColumn("__ot__", _epoch_sec(d, order_col))
     for name, expr in _rolling_exprs(w, agg_cols, agg_funcs, precision):
@@ -787,8 +723,8 @@ def _rolling_exprs(w, agg_cols, agg_funcs, precision):
     the literally identical expressions."""
     res = []
     for c, fn in zip(list(agg_cols), list(agg_funcs)):
-        x = _qc(c).try_cast("double")
-        xd = _qc(c).try_cast("decimal(28,8)")
+        x = qcol(c).try_cast("double")
+        xd = qcol(c).try_cast("decimal(28,8)")
         # overflow guard (the normalize() rule): a value that parses as
         # double but overflows DECIMAL(28,8) NULLs out of the window sum
         # while count(x) still includes it — the sum/mean would be
@@ -826,15 +762,11 @@ def _rolling_bucketed(d, keys, order_col, agg_cols, agg_funcs,
     windows inside (key, time-bucket) partitions, with each bucket's
     last ``window_rows - 1`` rows replicated into the key's successor
     bucket so boundary frames are complete; halo outputs dropped."""
-    from ..core import colutils
-    if span <= 0:
-        raise ValueError("rolling_aggregate: time_buckets_sec must be "
-                         "positive")
     cols = list(d.columns)
-    d2 = (d.withColumn("__t__", _epoch_sec(d, order_col))
-          .withColumn("__b__", _time_bucket(F.col("__t__"), span)))
-    summ = d2.groupBy(*_qcs(keys), "__b__").agg(F.count(F.lit(1)).alias("__cnt__"))
-    ws = Window.partitionBy(*_qcs(keys)).orderBy(F.col("__b__").asc_nulls_first())
+    d2, by_bucket, ws = _bucket(
+        d.withColumn("__t__", _epoch_sec(d, order_col)), keys, "__t__", span)
+    summ = (d2.groupBy(*map(qcol, keys), "__b__")
+            .agg(F.count(F.lit(1)).alias("__cnt__")))
     summ = (summ.withColumn("__nxt__", F.lead("__b__").over(ws))
             .withColumn("__haspred__",
                         F.lag(F.lit(1)).over(ws).isNotNull()))
@@ -877,30 +809,22 @@ def _rolling_bucketed(d, keys, order_col, agg_cols, agg_funcs,
                        .alias("__bad__")))
     else:
         bad = None
-    order_local = [F.col("__t__")] + [_qc(c)
+    order_local = [F.col("__t__")] + [qcol(c)
                                       for c in (tiebreak_cols or [])]
-    wdesc = Window.partitionBy(*_qcs(keys), "__b__").orderBy(
-        *[o.desc() for o in order_local])
+    wdesc = by_bucket.orderBy(*[o.desc() for o in order_local])
     halo_src = (d2.withColumn("__rdesc__", F.row_number().over(wdesc))
                 .where(F.col("__rdesc__") <= F.lit(window_rows - 1))
                 .drop("__rdesc__"))
-
-    def _q(side, c):
-        return F.col(side + "." + colutils.quote(c))
-
-    lhs = halo_src.alias("__hl__")
-    rhs = summ.select(*_qcs(keys), "__b__", "__nxt__").alias("__hr__")
-    cond = [_q("__hl__", c).eqNullSafe(_q("__hr__", c))
-            for c in keys + ["__b__"]]
-    halo = (lhs.join(rhs, on=cond, how="inner")
-            .where(_q("__hr__", "__nxt__").isNotNull())
-            .select(*[_q("__hl__", c).alias(c) for c in cols + ["__t__"]],
-                    _q("__hr__", "__nxt__").alias("__b__"))
+    rhs = summ.select(*map(qcol, keys), "__b__", "__nxt__")
+    halo = (key_join(halo_src, rhs, keys + ["__b__"])
+            .where(qref(_R, "__nxt__").isNotNull())
+            .select(*[qref(_L, c).alias(c) for c in cols + ["__t__"]],
+                    qref(_R, "__nxt__").alias("__b__"))
             .withColumn("__halo__", F.lit(1)))
     ucols = cols + ["__t__", "__b__", "__halo__"]
-    u = (d2.withColumn("__halo__", F.lit(0)).select(*[_qc(c) for c in ucols])
-         .unionByName(halo.select(*[_qc(c) for c in ucols])))
-    wu = (Window.partitionBy(*_qcs(keys), "__b__").orderBy(*order_local)
+    u = (d2.withColumn("__halo__", F.lit(0)).select(*map(qcol, ucols))
+         .unionByName(halo.select(*map(qcol, ucols))))
+    wu = (by_bucket.orderBy(*order_local)
           .rowsBetween(-(window_rows - 1), Window.currentRow))
     out = u
     for name, expr in _rolling_exprs(wu, agg_cols, agg_funcs, precision):
@@ -928,10 +852,8 @@ def merge_intervals(odf, key_cols: list[str] | str, start_col: str,
     number is the running sum of those breaks. Both windows and the
     final collapse share one hash partitioning on the key.
 
-    ``time_buckets_sec`` (r13, the hot-key scale path — same straggler
-    as sessionize/rolling/asof: a window partitioned by a skewed key is
-    ONE task, the shuffle-skew class AQE cannot split): buckets rows by
-    ``floor(start / span)`` and runs the carry in two exact phases. The
+    ``time_buckets_sec`` runs it on the bucketed skeleton (module
+    docstring), bucketing rows by ``floor(start / span)``. The
     running max-end is ASSOCIATIVE, so a per-(key, bucket) summary
     (max end) rolls up into a per-key running carry-in over the tiny
     bucket frame; joined back on (key, bucket) — reusing the phase-1
@@ -943,16 +865,12 @@ def merge_intervals(odf, key_cols: list[str] | str, start_col: str,
     Exact for ANY bucket span (no density requirement — an interval
     spanning many buckets is covered by the running max); equal starts
     share a bucket, so tie order is untouched. Property-tested
-    bit-identical to the single-window plan.
-
-    ``hot_key_rows`` (default ``"auto"`` = 262,144 rows) routes only
-    hot keys through the bucketed plan via the shared key census; cold
-    keys keep the plain plan and the outputs union. ``None`` buckets
-    every key. Without ``time_buckets_sec`` the threshold instead arms
-    the zero-extra-job hot-key warning on the single-window plan (r15 —
-    see sessionize)."""
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    bit-identical to the single-window plan. ``hot_key_rows`` routes
+    only hot keys through it, or arms the hot-key warning on the
+    single-window plan."""
+    keys = as_list(key_cols)
     d = _df(odf)
+    span = _span("merge_intervals", time_buckets_sec)
 
     # canonicalize -0.0 -> +0.0 on ingest (r14 parity-hunt find): Spark's
     # min/max keep the FIRST-SEEN of an IEEE-equal pair, so an island
@@ -967,31 +885,22 @@ def merge_intervals(odf, key_cols: list[str] | str, start_col: str,
     def _c0(c):
         return F.when(c == F.lit(0.0), F.lit(0.0)).otherwise(c)
 
-    s = _c0(_qc(start_col).cast("double"))
-    e = _c0(_qc(end_col).cast("double"))
-    if time_buckets_sec is not None:
-        if time_buckets_sec <= 0:
-            raise ValueError("merge_intervals: time_buckets_sec must be "
-                             "positive")
+    s = _c0(qcol(start_col).cast("double"))
+    e = _c0(qcol(end_col).cast("double"))
+    if span is not None:
         if hot_key_rows is not None:
-            thr = (AUTO_HOT_KEY_ROWS if hot_key_rows == "auto"
-                   else int(hot_key_rows))
-            hot, cold = _hot_key_split(d, keys, thr)
-            hot_out = merge_intervals(OmigoDF(hot), keys, start_col,
-                                      end_col, time_buckets_sec,
-                                      hot_key_rows=None)
-            cold_out = merge_intervals(OmigoDF(cold), keys, start_col,
-                                       end_col, time_buckets_sec=None)
-            return OmigoDF(hot_out.df.unionByName(cold_out.df))
-        return _merge_intervals_bucketed(d, keys, s, e,
-                                         float(time_buckets_sec))
+            return _route_hot_keys(
+                [d], keys, hot_key_rows, span,
+                lambda fs, **plan: merge_intervals(
+                    OmigoDF(fs[0]), keys, start_col, end_col, **plan))
+        return _merge_intervals_bucketed(d, keys, s, e, span)
     # order keys materialized as columns (r15, see sessionize): ordering
     # by the canonicalized-double EXPRESSIONS denied Sort sharing and
     # Window collapse — the prev-max, running-sum and hot-key-counter
     # windows each paid their own Sort pass. The aggregates read the
     # same materialized values, so results are identical.
     s0, e0 = F.col("__s0__"), F.col("__e0__")
-    w = Window.partitionBy(*_qcs(keys)).orderBy(s0, e0)
+    w = Window.partitionBy(*map(qcol, keys)).orderBy(s0, e0)
     prev_max_end = F.max(e0).over(
         w.rowsBetween(Window.unboundedPreceding, -1))
     brk = (F.when(prev_max_end.isNull() | (s0 > prev_max_end), 1)
@@ -1005,7 +914,7 @@ def merge_intervals(odf, key_cols: list[str] | str, start_col: str,
               .drop("__brk__"))
     tagged = _watch_hot_keys(tagged, w, "merge_intervals", hot_key_rows)
     return OmigoDF(
-        tagged.groupBy(*_qcs(keys), "__island__")
+        tagged.groupBy(*map(qcol, keys), "__island__")
         .agg(F.min(s0).alias("island_start"),
              F.max(e0).alias("island_end"),
              F.count(F.lit(1)).alias("n_intervals"))
@@ -1019,11 +928,6 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     of magnitude smaller than the data. NULL starts land in the NULL
     bucket, which sorts first — the same place the single window's
     NULLS-FIRST order puts them."""
-    from ..core import colutils
-
-    def _q(side, c):
-        return F.col(side + "." + colutils.quote(c))
-
     # phase 1: ONE stacked window evaluation computes the local prefix-
     # max of ends, the LOCAL break flag (break ignoring cross-bucket
     # carry) and the local running break count, all over the same
@@ -1034,9 +938,9 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     # running-sum position relied on the join incidentally preserving
     # tie order; now the global island id is pure per-row arithmetic
     # after the joins (see below), so tie pairing is structural.
-    d2 = (d.withColumn("__s__", s).withColumn("__e__", e)
-          .withColumn("__b__", _time_bucket(F.col("__s__"), span)))
-    wl = Window.partitionBy(*_qcs(keys), "__b__").orderBy("__s__", "__e__")
+    d2, by_bucket, ws = _bucket(
+        d.withColumn("__s__", s).withColumn("__e__", e), keys, "__s__", span)
+    wl = by_bucket.orderBy("__s__", "__e__")
     pme = F.max("__e__").over(wl.rowsBetween(Window.unboundedPreceding, -1))
     local = (d2.withColumn(
                  "__lbrk__",
@@ -1050,10 +954,9 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     # the phase-1 exchange (no second scan of the input); the per-bucket
     # break count nlb rides the SAME aggregate (r15 — it only needs
     # phase-1 columns, so it no longer waits for the carry-in join).
-    summ = local.groupBy(*_qcs(keys), "__b__").agg(
+    summ = local.groupBy(*map(qcol, keys), "__b__").agg(
         F.max("__e__").alias("__me__"),
         F.sum("__lbrk__").alias("__nlb__"))
-    ws = Window.partitionBy(*_qcs(keys)).orderBy(F.col("__b__").asc_nulls_first())
     summ = summ.withColumn(
         "__cin__", F.max("__me__").over(
             ws.rowsBetween(Window.unboundedPreceding, -1)))
@@ -1071,20 +974,16 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     # projection (which reuses the phase-1 exchange) and re-aggregating
     # is break-count-sized work, so the data-level carry-in join of the
     # old shape disappears: ONE row-level summary join remains (below).
-    bcond = [_q("__bl__", c).eqNullSafe(_q("__br__", c))
-             for c in keys + ["__b__"]]
+    kb = keys + ["__b__"]
     breaks = (local.where(F.col("__lbrk__") == 1)
-              .select(*_qcs(keys), "__b__", "__s__", "__L__")
-              .alias("__bl__"))
-    cinr = summ.select(*_qcs(keys), "__b__", "__cin__",
-                       "__nlb__").alias("__br__")
+              .select(*map(qcol, keys), "__b__", "__s__", "__L__"))
+    cinr = summ.select(*map(qcol, keys), "__b__", "__cin__", "__nlb__")
     # every non-empty bucket's first row is a local break (its in-bucket
     # prefix-max is NULL), so this breaks-side aggregation covers every
     # summary bucket and IS the summary: nlb (constant per bucket) rides
     # the same groupBy via max(), so summ is referenced exactly once.
-    summary = (breaks.join(cinr, on=bcond, how="inner")
-               .groupBy(*[_q("__bl__", c) for c in keys],
-                        _q("__bl__", "__b__"))
+    summary = (key_join(breaks, cinr, kb)
+               .groupBy(*[qref(_L, c) for c in kb])
                .agg(F.coalesce(
                    F.max(F.when(F.col("__s__") <= F.col("__cin__"),
                                 F.col("__L__"))),
@@ -1095,20 +994,16 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     summary = summary.withColumn(
         "__P__", F.coalesce(F.sum(F.col("__nlb__") - F.col("__K__")).over(
             ws.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)))
-    cond2 = [_q("__il__", c).eqNullSafe(_q("__ir__", c))
-             for c in keys + ["__b__"]]
-    ilhs = local.alias("__il__")
-    irhs = summary.select(*_qcs(keys), "__b__", "__P__", "__K__").alias("__ir__")
-    numbered = (ilhs.join(irhs, on=cond2, how="inner")
+    irhs = summary.select(*map(qcol, keys), "__b__", "__P__", "__K__")
+    numbered = (key_join(local, irhs, kb)
                 .withColumn("__island__",
-                            _q("__ir__", "__P__") + _q("__il__", "__L__")
-                            - F.least(_q("__il__", "__L__"),
-                                      _q("__ir__", "__K__"))))
+                            qref(_R, "__P__") + qref(_L, "__L__")
+                            - F.least(qref(_L, "__L__"), qref(_R, "__K__"))))
     return OmigoDF(
-        numbered.groupBy(*[_q("__il__", k).alias(k) for k in keys],
+        numbered.groupBy(*[qref(_L, k).alias(k) for k in keys],
                          "__island__")
-        .agg(F.min(_q("__il__", "__s__")).alias("island_start"),
-             F.max(_q("__il__", "__e__")).alias("island_end"),
+        .agg(F.min(qref(_L, "__s__")).alias("island_start"),
+             F.max(qref(_L, "__e__")).alias("island_end"),
              F.count(F.lit(1)).alias("n_intervals"))
         .withColumnRenamed("__island__", "island_id"))
 
@@ -1123,13 +1018,13 @@ def session_stats(odf, key_cols: list[str] | str, time_col: str,
     ``time_buckets_sec`` / ``hot_key_rows`` pass through to sessionize's
     hot-key scale path (r13 — the collapse itself is partial-aggregated
     and skew-free; only the sessionize carry needed the two-phase plan)."""
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    keys = as_list(key_cols)
     s = sessionize(odf, keys, time_col, gap_sec,
                    time_buckets_sec=time_buckets_sec,
                    hot_key_rows=hot_key_rows).df
     t = _epoch_sec(s, time_col)
     return OmigoDF(
-        s.groupBy(*_qcs(keys), "session_id")
+        s.groupBy(*map(qcol, keys), "session_id")
          .agg(F.min(t).alias("session_start"),
               F.max(t).alias("session_end"),
               (F.max(t) - F.min(t)).alias("duration_sec"),

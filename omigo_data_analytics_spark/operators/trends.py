@@ -30,10 +30,12 @@ union of values; jaccard matches the reference's computeJacSim (:845).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..core.colutils import qcol
+from ..core.colutils import qcol, qref
 
 from ..core.dataframe import OmigoDF
 
@@ -104,7 +106,7 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
     lead_cols = ["sq", "nvals", "tot", "hterm"]
     pairs = (norms
              .select(*[qcol(k) for k in keys], qcol(bucket_col), *lead_cols,
-                     F.lead(bucket_col).over(w).alias("__bnext__"),
+                     F.lead(qcol(bucket_col)).over(w).alias("__bnext__"),
                      *[F.lead(c).over(w).alias(f"{c}2") for c in lead_cols])
              .where(F.col("__bnext__").isNotNull()))
     a = counts.alias("a")
@@ -114,13 +116,13 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
     pb = F.col("b.cnt") / F.col("p.tot2")
     m = (pa + pb) / 2
     dots = (pr
-            .join(a, [F.col(f"a.{k}") == F.col(f"p.{k}") for k in keys]
-                  + [F.col(f"a.{bucket_col}") == F.col(f"p.{bucket_col}")])
-            .join(b, [F.col(f"b.{k}") == F.col(f"p.{k}") for k in keys]
-                  + [F.col(f"b.{bucket_col}") == F.col("p.__bnext__"),
-                     F.col(f"b.{value_col}") == F.col(f"a.{value_col}")])
-            .groupBy(*[F.col(f"p.{k}").alias(k) for k in keys],
-                     F.col(f"p.{bucket_col}").alias(bucket_col),
+            .join(a, [qref("a", k) == qref("p", k) for k in keys]
+                  + [qref("a", bucket_col) == qref("p", bucket_col)])
+            .join(b, [qref("b", k) == qref("p", k) for k in keys]
+                  + [qref("b", bucket_col) == F.col("p.__bnext__"),
+                     qref("b", value_col) == qref("a", value_col)])
+            .groupBy(*[qref("p", k).alias(k) for k in keys],
+                     qref("p", bucket_col).alias(bucket_col),
                      F.col("p.__bnext__").alias("bucket_next"))
             .agg(F.sum(F.col("a.cnt") * F.col("b.cnt")).alias("dot"),
                  F.count(F.lit(1)).alias("matched"),
@@ -134,26 +136,26 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
                        qcol(bucket_col).alias("__d_b__"),
                        F.col("bucket_next").alias("__d_bn__"),
                        "dot", "matched", "mterm", "fa_m", "fb_m")
-    cond = [pairs[k] == dsel[f"__d_{k}__"] for k in keys]
-    cond += [pairs[bucket_col] == dsel["__d_b__"],
-             pairs["__bnext__"] == dsel["__d_bn__"]]
-    z = lambda c: F.coalesce(dsel[c], F.lit(0.0))  # noqa: E731
-    tot, tot2 = pairs["tot"], pairs["tot2"]
-    ha = F.log2(tot) - pairs["hterm"] / tot
-    hb = F.log2(tot2) - pairs["hterm2"] / tot2
-    fa_all = pairs["hterm"] / (2 * tot) - (1 + F.log2(tot)) / 2
-    fb_all = pairs["hterm2"] / (2 * tot2) - (1 + F.log2(tot2)) / 2
+    P, D = partial(qref, "p"), partial(qref, "d")  # pair / dot-side refs
+    cond = [P(k) == D(f"__d_{k}__") for k in keys]
+    cond += [P(bucket_col) == D("__d_b__"), P("__bnext__") == D("__d_bn__")]
+    z = lambda c: F.coalesce(D(c), F.lit(0.0))  # noqa: E731
+    tot, tot2 = P("tot"), P("tot2")
+    ha = F.log2(tot) - P("hterm") / tot
+    hb = F.log2(tot2) - P("hterm2") / tot2
+    fa_all = P("hterm") / (2 * tot) - (1 + F.log2(tot)) / 2
+    fb_all = P("hterm2") / (2 * tot2) - (1 + F.log2(tot2)) / 2
     hm = -(z("mterm") + (fa_all - z("fa_m")) + (fb_all - z("fb_m")))
-    full = (pairs.join(dsel, cond, "left")
-            .select(*[pairs[k] for k in keys],
-                    pairs[bucket_col],
-                    pairs["__bnext__"].alias("bucket_next"),
-                    F.round(F.coalesce(dsel["dot"], F.lit(0))
-                            / F.sqrt(pairs["sq"] * pairs["sq2"]), 6)
+    full = (pr.join(dsel.alias("d"), cond, "left")
+            .select(*[P(k) for k in keys],
+                    P(bucket_col),
+                    P("__bnext__").alias("bucket_next"),
+                    F.round(F.coalesce(D("dot"), F.lit(0))
+                            / F.sqrt(P("sq") * P("sq2")), 6)
                     .alias("cosine_sim"),
-                    F.round(F.coalesce(dsel["matched"], F.lit(0)).cast("double")
-                            / (pairs["nvals"] + pairs["nvals2"]
-                               - F.coalesce(dsel["matched"], F.lit(0))), 6)
+                    F.round(F.coalesce(D("matched"), F.lit(0)).cast("double")
+                            / (P("nvals") + P("nvals2")
+                               - F.coalesce(D("matched"), F.lit(0))), 6)
                     .alias("jaccard_sim"),
                     F.round(F.greatest(hm - (ha + hb) / 2, F.lit(0.0)), 6)
                     .alias("jsd")))

@@ -37,10 +37,10 @@ _DENSITY_GRID = 200     # evaluation grid for density()
 _MAX_POINTS = 10_000    # driver-side point cap for row-level charts
 
 
-def _numcol(df, c: str):
+def _numcol(c: str):
     """Numeric view of a column: numeric dtypes pass through, strings go
     through try_cast (ANSI mode — plain cast throws on junk)."""
-    return df[c].try_cast("double")
+    return qcol(c).try_cast("double")
 
 
 def _is_numeric(xdf: OmigoDF, col: str) -> bool:
@@ -51,7 +51,7 @@ def _is_numeric(xdf: OmigoDF, col: str) -> bool:
         r = xdf.df.select(
             F.count(F.when((qcol(col).isNotNull()) & (qcol(col) != ""), 1)
                     ).alias("n"),
-            F.count(_numcol(xdf.df, col)).alias("k")).collect()[0]
+            F.count(_numcol(col)).alias("k")).collect()[0]
         return r["n"] == r["k"] and r["n"] > 0
     return dt not in ("date", "timestamp", "boolean") and not dt.startswith(
         ("array", "map", "struct"))
@@ -124,7 +124,7 @@ class VisualDF(OmigoDF):
         data = _cap_points(data, 1 + len(ycols))
         pdf = (data.df
                .select(data.df[xcol],
-                       *[_numcol(data.df, c).alias(c) for c in ycols])
+                       *[_numcol(c).alias(c) for c in ycols])
                .orderBy(xcol).toPandas())
         spec = {"kind": "line", "x": xcol, "y": ycols, "data": pdf,
                 "ylabel": ylabel, "title": title or ylabel,
@@ -150,7 +150,7 @@ class VisualDF(OmigoDF):
             qcol(xcol),
             F.coalesce(qcol(class_col).cast("string"), F.lit(""))
             .alias(class_col),
-            _numcol(self.df, ycol).alias(ycol))
+            _numcol(ycol).alias(ycol))
         # reference aggregates duplicates with sumfloat (graph_ext.py:150-156);
         # pivot's agg does the same in one pass, 0 fill matching default_val="0"
         wide = (base.groupBy(xcol).pivot(class_col, hue).sum(ycol)
@@ -208,7 +208,7 @@ class VisualDF(OmigoDF):
                     "data": pdf, "title": title,
                     "figsize": (xfigsize, yfigsize), "props": props or {}}
             return Plot(spec, self)
-        v = _numcol(df, xcol)
+        v = _numcol(xcol)
         r = df.select(F.min(v).alias("lo"), F.max(v).alias("hi")).collect()[0]
         lo, hi = r["lo"], r["hi"]
         if lo is None:
@@ -238,7 +238,7 @@ class VisualDF(OmigoDF):
         the ECDF — instead of shipping every value to seaborn."""
         hue = _class_guard(self, class_col, max_class_col)
         df = self.df
-        v = _numcol(df, xcol)
+        v = _numcol(xcol)
         qs = [i / (_ECDF_GRID - 1) for i in range(_ECDF_GRID)]
         agg = F.percentile(v, F.lit(qs)).alias("xs")
         if class_col:
@@ -271,7 +271,7 @@ class VisualDF(OmigoDF):
         cols = ycols + ([class_col] if class_col else [])
         data = _cap_points(self.select(cols), len(cols))
         pdf = data.df.select(
-            *[_numcol(data.df, c).alias(c) for c in ycols],
+            *[_numcol(c).alias(c) for c in ycols],
             *([qcol(class_col).cast("string").alias(class_col)]
               if class_col else [])).toPandas()
         curves = {}
@@ -310,7 +310,7 @@ class VisualDF(OmigoDF):
         df = data.df
         gcols = [qcol(xcol).cast("string").alias(xcol)] + (
             [qcol(class_col).cast("string").alias(class_col)] if class_col else [])
-        v = _numcol(df, ycol)
+        v = _numcol(ycol)
         pdf = (df.groupBy(*gcols)
                .agg(F.avg(v).alias(ycol), F.stddev(v).alias(f"{ycol}__sd"),
                     F.count(v).alias(f"{ycol}__n"))
@@ -336,7 +336,7 @@ class VisualDF(OmigoDF):
                  f"Doing downsampling for clean display to max_rows: {max_rows}")
             data = data.sample_column_by_max_uniq_values(xcol, max_rows)
         df = data.df
-        v = _numcol(df, ycol)
+        v = _numcol(ycol)
         gcols = [qcol(xcol).cast("string").alias(xcol)] + (
             [qcol(class_col).cast("string").alias(class_col)] if class_col else [])
         rows = (df.groupBy(*gcols)
@@ -381,7 +381,7 @@ class VisualDF(OmigoDF):
         exprs = []
         for i, a in enumerate(cols):
             for b in cols[i + 1:]:
-                exprs.append(F.corr(_numcol(df, a), _numcol(df, b))
+                exprs.append(F.corr(_numcol(a), _numcol(b))
                              .alias(f"{a}|{b}"))
         row = df.select(*exprs).collect()[0] if exprs else {}
         matrix = [[1.0 if i == j else None for j in range(len(cols))]
@@ -411,7 +411,7 @@ class VisualDF(OmigoDF):
         sel = cols + ([class_col] if class_col else [])
         data = _cap_points(self.select(sel), len(sel), cap=2000)
         pdf = data.df.select(
-            *[_numcol(data.df, c).alias(c) for c in cols],
+            *[_numcol(c).alias(c) for c in cols],
             *([qcol(class_col).cast("string").alias(class_col)]
               if class_col else [])).toPandas()
         spec = {"kind": "pairplot", "cols": cols, "hue": class_col,

@@ -233,3 +233,34 @@ def test_add_seq_num_stable_on_nondeterministic_upstream(spark):
     out = base.add_seq_num("sno")
     nums = sorted(r["sno"] for r in out.df.select("sno").collect())
     assert nums == list(range(1, len(nums) + 1))
+
+
+def test_observe_async_logs_callback_error_once(spark, caplog):
+    """A callback that raises is logged once on the omigo_spark logger
+    and leaves the observed query's result alone."""
+    import logging
+    import time
+
+    from pyspark.sql import functions as F
+
+    from omigo_data_analytics_spark.core.jobs import observe_async
+
+    calls = []
+
+    def cb(m):
+        calls.append(m)
+        raise RuntimeError("watch callback boom")
+
+    def logged():
+        return [r for r in caplog.records if r.name == "omigo_spark"
+                and r.exc_info and "watch callback boom" in str(r.exc_info[1])]
+
+    df = observe_async(spark.range(10), {"n": F.count(F.lit(1))}, cb)
+    with caplog.at_level(logging.WARNING, logger="omigo_spark"):
+        assert df.count() == 10
+        deadline = time.time() + 15
+        while not logged() and time.time() < deadline:
+            time.sleep(0.1)
+        time.sleep(1.5)  # a few more poll rounds: no second record
+    assert [m["n"] for m in calls] == [10]
+    assert len(logged()) == 1

@@ -158,3 +158,30 @@ def test_sample_frames_zero_duration_yields_no_frames(spark):
     out = MM.sample_frames(withmeta, "payload", every_ms=2, fake=True).df
     ids = [r["id"] for r in out.collect()]
     assert 2 not in ids and ids.count(1) == 3
+
+
+def test_enrich_with_model_dotted_key(spark):
+    """A '.' in an input column name reaches every step of the dedup
+    rewrite: the distinct select, mapInPandas and the join back."""
+    df = spark.createDataFrame(
+        [(1, "x"), (2, "y"), (3, "x"), (4, None)]).toDF("id", "a.b")
+    out = EN.enrich_with_model(
+        OmigoDF(df), ["a.b"],
+        lambda recs: [f"m:{r['a.b']}" for r in recs], "m").df
+    assert out.columns == ["id", "a.b", "m"]
+    assert {r["id"]: r["m"] for r in out.collect()} == \
+        {1: "m:x", 2: "m:y", 3: "m:x", 4: "m:None"}
+
+
+def test_call_web_service_dedup_dotted_key(spark):
+    df = spark.createDataFrame(
+        [(1, "p"), (2, "q"), (3, "p"), (4, None)]).toDF("id", "k.ey")
+    out = EN.call_web_service(OmigoDF(df), "http://x/{k.ey}", prefix="ws",
+                              call_fn=_mk_fake_call(),
+                              enable_opt_exec=True).df
+    assert out.columns == ["id", "k.ey", "ws:response",
+                           "ws:response:status_code", "ws:response:error",
+                           "ws:response:success"]
+    assert {r["id"]: r["ws:response"] for r in out.collect()} == \
+        {1: "echo:http://x/p", 2: "echo:http://x/q",
+         3: "echo:http://x/p", 4: "echo:http://x/"}

@@ -691,3 +691,18 @@ def test_token_estimates_is_map_side(documents):
     p = (token_estimates(documents).df
          ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange hashpartitioning" not in p
+
+
+def test_pack_sequences_dotted_key(spark):
+    """A '.' in a key column: same bins as the plain-named input, with
+    the opt-in uniqueness check on."""
+    rows = [(i, 100 + (i * 37) % 400) for i in range(60)]
+    plain = OmigoDF(spark.createDataFrame(rows, ["kid", "n"]))
+    hostile = OmigoDF(spark.createDataFrame(rows).toDF("k.id", "n"))
+    want = {r["kid"]: r["bin_id"] for r in TX.pack_sequences(
+        plain, "n", budget=1000, key_cols=["kid"],
+        check_unique=True).df.collect()}
+    got = {r["k.id"]: r["bin_id"] for r in TX.pack_sequences(
+        hostile, "n", budget=1000, key_cols=["k.id"],
+        check_unique=True).df.collect()}
+    assert got == want and len(set(got.values())) > 1

@@ -212,3 +212,32 @@ def test_arg_minmax_mapside_topk(spark):
     i_exch = p.index("Exchange hashpartitioning")
     assert re.search(r"WindowGroupLimit.*Partial", p[i_exch:]), \
         "no map-side partial window-group limit below the exchange"
+
+
+# (shuffle Exchange, Sort, Window, *Join) node counts in the executed
+# plans of the time-series family at sf0.001. The bucketed carries share
+# one bucket helper, one null-safe key join and one hot-key router; any
+# change to those must leave every plan's shape exactly as pinned here.
+TIMESERIES_PLAN_NODES = {
+    "asof_join": (2, 1, 1, 0),
+    "asof_nearest": (2, 2, 2, 0),
+    "asof_bucketed": (9, 5, 3, 9),
+    "asof_nearest_bucketed": (27, 14, 6, 24),
+    "sessionize": (1, 1, 2, 0),
+    "sessionize_bucketed": (4, 4, 8, 4),
+    "rolling_aggregate": (1, 1, 2, 0),
+    "rolling_bucketed": (8, 6, 7, 7),
+    "merge_intervals_islands": (1, 1, 2, 0),
+    "merge_intervals_bucketed": (7, 6, 9, 6),
+    "range_join": (0, 0, 0, 1),
+}
+
+
+@pytest.mark.parametrize("name", list(TIMESERIES_PLAN_NODES))
+def test_timeseries_plan_node_counts(spark, name):
+    import re
+
+    p = _plan(spark, name)
+    got = tuple(len(re.findall(pat, p)) for pat in
+                (r"\bExchange\b", r"\bSort \[", r"\bWindow \[", r"\b\w*Join\b"))
+    assert got == TIMESERIES_PLAN_NODES[name]

@@ -280,3 +280,19 @@ def test_null_bucket_excluded_engine_and_oracle_agree(spark):
         + ") ORDER BY 1, 2").df()
     pd.testing.assert_frame_equal(sp_tr, du_tr, check_dtype=False)
     assert not sp_tr["wk"].isna().any()
+
+
+def test_distribution_drift_dotted_names(spark):
+    """'.' in the key, bucket and value names: same rows as the
+    plain-named input."""
+    rows = [("a", 1, "x"), ("a", 1, "y"), ("a", 2, "x"), ("a", 2, "y"),
+            ("a", 3, "z"), ("c", 1, "x"), ("c", 1, "x"), ("c", 2, "x"),
+            ("c", 2, "y")]
+    plain = OmigoDF(spark.createDataFrame(rows, ["k", "b", "v"]))
+    hostile = OmigoDF(spark.createDataFrame(rows).toDF("k.id", "b.w", "v.x"))
+    want = sorted(tuple(r) for r in
+                  TR.distribution_drift(plain, ["k"], "b", "v").df.collect())
+    out = TR.distribution_drift(hostile, ["k.id"], "b.w", "v.x").df
+    assert out.columns == ["k.id", "b.w", "bucket_next", "cosine_sim",
+                           "jaccard_sim", "jsd"]
+    assert sorted(tuple(r) for r in out.collect()) == want and len(want) == 3

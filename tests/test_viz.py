@@ -179,3 +179,11 @@ def test_boxplot_and_ecdf_skip_all_null_groups(spark):
     assert labels == ["g1"]               # all-null group skipped, no crash
     e = to_visual(OmigoDF(df)).ecdf("v", class_col="cat")
     assert set(e.spec["curves"]) == {"g1"}
+
+
+def test_numeric_view_dotted_name(spark):
+    """The numeric view of a column (histogram's value range, the
+    numeric sniff) quotes the name: a '.' is not a struct access."""
+    v = VisualDF(spark.createDataFrame(
+        [(float(i), float(i % 4)) for i in range(20)]).toDF("x.t", "y.v"))
+    assert v.histogram("y.v", bins=4).kind == "histogram"
