@@ -22,7 +22,7 @@ import random
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..core.colutils import qcol, quote
+from ..core.colutils import qcol, qref, quote
 
 from ..core.dataframe import OmigoDF
 from ..core.jobs import checkpoint_with_metrics
@@ -194,7 +194,7 @@ def lsh_candidate_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
             f"rows_per_band={rows_per_band} — the trailing "
             f"{k % rows_per_band} minhashes would be silently unbanded")
     sigs = minhash_signatures(odf, col, k).df.select(
-        id_col, *[f"mh_{j}" for j in range(k)])
+        qcol(id_col), *[f"mh_{j}" for j in range(k)])
     # one banded projection via a single explode — NOT a union of
     # per-band selects, which would re-evaluate the md5-heavy signature
     # expression once per band per join side (8x the map work for
@@ -228,8 +228,8 @@ def lsh_candidate_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
     b = all_bands.alias("b")
     pairs = (a.join(b, on=[F.col("a.band") == F.col("b.band"),
                            F.col("a.band_key") == F.col("b.band_key"),
-                           F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-             .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+                           qref("a", id_col) < qref("b", id_col)])
+             .select(qref("a", id_col).alias("id_a"), qref("b", id_col).alias("id_b"))
              .distinct())
     return OmigoDF(pairs)
 
@@ -350,17 +350,18 @@ def duplicate_span_stats(odf: OmigoDF, id_col: str = "doc_id",
                 "same-id copies are treated as one document",
                 UserWarning, stacklevel=2)
     base = df.selectExpr(
-        id_col,
+        quote(id_col),
         f"CAST(size({_tokens('spark', col)}) AS BIGINT) AS n_tokens",
         f"{span_grams_expr('spark', col, n)} AS __grams__")
     # the exploded (id, pos, key) stream feeds BOTH the dup-key aggregate
     # and the semi-join probe side — checkpoint it so the md5 window pass
     # runs once, not twice (same pattern as ngram_jaccard_pairs)
-    pos = (base.selectExpr(id_col, "posexplode(__grams__) AS (pos, key)")
+    pos = (base.selectExpr(quote(id_col), "posexplode(__grams__) AS (pos, key)")
            .localCheckpoint(eager=False))
     grp = pos.groupBy("key")
     if scope == "cross_doc":
-        dup = (grp.agg(F.min(id_col).alias("__mn__"), F.max(id_col).alias("__mx__"))
+        dup = (grp.agg(F.min(qcol(id_col)).alias("__mn__"),
+                       F.max(qcol(id_col)).alias("__mx__"))
                .where(F.col("__mn__") != F.col("__mx__")).select("key"))
     else:
         dup = (grp.agg(F.count(F.lit(1)).alias("__c__"))
@@ -377,7 +378,7 @@ def duplicate_span_stats(odf: OmigoDF, id_col: str = "doc_id",
                 F.sum("__cover__").cast("bigint").alias("dup_tokens")))
     out = (base.select(qcol(id_col), "n_tokens")
            .join(cov, on=id_col, how="left")
-           .selectExpr(id_col, "n_tokens",
+           .selectExpr(quote(id_col), "n_tokens",
                        "COALESCE(dup_spans, 0L) AS dup_spans",
                        "COALESCE(dup_tokens, 0L) AS dup_tokens",
                        "ROUND(CAST(COALESCE(dup_tokens, 0) AS DOUBLE)"
@@ -429,10 +430,11 @@ def remove_duplicate_spans(odf: OmigoDF, id_col: str = "doc_id",
                 "lists across documents; dedupe ids first")
     grams = df.selectExpr(
         "*", f"{span_grams_expr('spark', col, n, key_bits)} AS __grams__")
-    pos = (grams.selectExpr(id_col, "posexplode(__grams__) AS (pos, key)")
+    pos = (grams.selectExpr(quote(id_col), "posexplode(__grams__) AS (pos, key)")
            .localCheckpoint(eager=False))
     own = (pos.groupBy("key")
-           .agg(F.min(id_col).alias("__own__"), F.max(id_col).alias("__mx__"))
+           .agg(F.min(qcol(id_col)).alias("__own__"),
+                F.max(qcol(id_col)).alias("__mx__"))
            .where(F.col("__own__") != F.col("__mx__"))
            .select("key", "__own__"))
     rm = (pos.join(own, on="key")
@@ -597,9 +599,9 @@ def ngram_jaccard_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
     a = ex.alias("a")
     b = ex.alias("b")
     shared = (a.join(b, on=[F.col("a.s") == F.col("b.s"),
-                            F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-              .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                       F.col(f"b.{id_col}").alias("id_b"),
+                            qref("a", id_col) < qref("b", id_col)])
+              .groupBy(qref("a", id_col).alias("id_a"),
+                       qref("b", id_col).alias("id_b"),
                        F.col("a.sh_n").alias("na"), F.col("b.sh_n").alias("nb"))
               .agg(F.count(F.lit(1)).alias("shared")))
     out = (shared
@@ -898,6 +900,11 @@ def cluster_near_dups(odf: OmigoDF, id_col: str = "doc_id",
     identical docs) measured 70.6 s → ~3 s with identical labels;
     ``"auto"`` (default) collapses only when the cheap duplicate
     census says it pays."""
+    cc_fn = {"propagation": connected_components,
+             "star": connected_components_star}.get(algorithm)
+    if cc_fn is None:
+        raise ValueError(f"cluster_near_dups: algorithm must be "
+                         f"'propagation' or 'star', got {algorithm!r}")
     if _should_collapse(odf.df, col, collapse_exact, threshold):
         mapping = _exact_rep_mapping(odf.df, id_col, col) \
             .localCheckpoint(eager=False)
@@ -906,8 +913,6 @@ def cluster_near_dups(odf: OmigoDF, id_col: str = "doc_id",
                    .select(qcol(id_col)), id_col, "left_semi"))
         verified = OmigoDF(_verified_dup_pairs(rep_rows, id_col, col,
                                                threshold))
-        cc_fn = (connected_components_star if algorithm == "star"
-                 else connected_components)
         cc = cc_fn(verified).df.withColumnRenamed("id", "__rep__")
         out = (odf.df
                .join(mapping, on=id_col, how="left")
@@ -918,8 +923,6 @@ def cluster_near_dups(odf: OmigoDF, id_col: str = "doc_id",
                .drop("__rep__"))
         return OmigoDF(out)
     verified = OmigoDF(_verified_dup_pairs(odf, id_col, col, threshold))
-    cc_fn = (connected_components_star if algorithm == "star"
-             else connected_components)
     cc = cc_fn(verified).df.withColumnRenamed("id", id_col)
     out = (odf.df.join(cc, on=id_col, how="left")
            .withColumn("cluster_id",
@@ -1053,7 +1056,7 @@ def _exact_rep_mapping(df, id_col: str, col: str):
     w = Window.partitionBy("__fp__")
     return (df.select(qcol(id_col), fp.alias("__fp__"))
             .where(F.col("__fp__").isNotNull())
-            .withColumn("__rep__", F.min(id_col).over(w))
+            .withColumn("__rep__", F.min(qcol(id_col)).over(w))
             .select(qcol(id_col), "__rep__"))
 
 

@@ -353,3 +353,42 @@ def test_fuzzy_pairs_unicode_codepoints(spark):
                FZ.fuzzy_pairs(OmigoDF(df), "id", "name", max_dist=d)
                .df.collect()}
         assert got == _brute(rows, d), f"unicode mismatch at d={d}"
+
+
+def test_fuzzy_join_hostile_shared_column_names(spark):
+    """Shared columns named 'n.a' and 'na`me' are carried and suffixed
+    like any other shared column."""
+    left = spark.createDataFrame(
+        [(1, "widget", "x"), (2, "gadget", "y")],
+        "lid long, name string, tag string").toDF("lid", "n.a", "na`me")
+    right = spark.createDataFrame(
+        [(10, "widgets", "p"), (11, "midget", "q"), (12, "nothing", "r")],
+        "rid long, name string, tag string").toDF("rid", "n.a", "na`me")
+    out = FZ.fuzzy_join(OmigoDF(left), OmigoDF(right), "n.a", "n.a",
+                        max_dist=1).df
+    assert out.columns == ["lid", "n.a_l", "na`me_l", "rid", "n.a_r",
+                           "na`me_r", "dist"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "widget", "x", 10, "widgets", "p", 1),
+        (1, "widget", "x", 11, "midget", "q", 1)]
+
+
+@pytest.mark.parametrize("entry", ["fuzzy_pairs", "dedup_fuzzy",
+                                   "fuzzy_join"])
+def test_fuzzy_warn_unsafe_frac_points_at_caller(spark, entry):
+    """The skew warning is attributed to the line that called the public
+    operator, not to a frame inside the module."""
+    import warnings as W
+
+    rows = [(i, f"Customer#{i:06d}") for i in range(100)]
+    o = OmigoDF(spark.createDataFrame(rows, "id long, name string"))
+    with W.catch_warnings(record=True) as rec:
+        W.simplefilter("always")
+        if entry == "fuzzy_join":
+            FZ.fuzzy_join(o, o, "name", "name", max_dist=1,
+                          warn_unsafe_frac=0.25)
+        else:
+            getattr(FZ, entry)(o, "id", "name", max_dist=1,
+                               warn_unsafe_frac=0.25)
+    hits = [w for w in rec if "unsafe-fraction" in str(w.message)]
+    assert hits and all(w.filename == __file__ for w in hits)

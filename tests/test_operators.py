@@ -1,6 +1,7 @@
 """Training-data operator tests: text metrics, dedup family, similarity
 search, explode_json."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from omigo_data_analytics_spark import OmigoDF
@@ -706,3 +707,43 @@ def test_pack_sequences_dotted_key(spark):
         hostile, "n", budget=1000, key_cols=["k.id"],
         check_unique=True).df.collect()}
     assert got == want and len(set(got.values())) > 1
+
+
+_DOTTED_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog again and again today"),
+    (2, "the quick brown fox jumps over the lazy dog again and again today"
+        " tomorrow"),
+    (3, "the quick brown fox jumps over the lazy dog again and again today"),
+    (4, "completely different words appear in this unrelated document text"),
+    (5, None),
+]
+
+
+@pytest.mark.parametrize("call", [
+    lambda o, k: DD.lsh_candidate_pairs(o, id_col=k),
+    lambda o, k: DD.ngram_jaccard_pairs(o, id_col=k),
+    lambda o, k: DD.duplicate_span_stats(o, id_col=k, n=4),
+    lambda o, k: DD.remove_duplicate_spans(o, id_col=k, n=4),
+    lambda o, k: DD.dedup_near(o, id_col=k, threshold=0.5,
+                               collapse_exact=True),
+    lambda o, k: DD.cluster_near_dups(o, id_col=k, threshold=0.5,
+                                      collapse_exact=True),
+], ids=["lsh_candidate_pairs", "ngram_jaccard_pairs", "duplicate_span_stats",
+        "remove_duplicate_spans", "dedup_near", "cluster_near_dups"])
+def test_dedup_family_dotted_id_col(spark, call):
+    """A '.' in id_col: each dedup entry point returns exactly the rows
+    of the plain-named input (id column renamed back)."""
+    plain = spark.createDataFrame(_DOTTED_DOCS, "doc_id long, text string")
+    hostile = plain.toDF("d.id", "text")
+    want = call(OmigoDF(plain), "doc_id").df
+    got = call(OmigoDF(hostile), "d.id").df
+    got = got.toDF(*["doc_id" if c == "d.id" else c for c in got.columns])
+    assert got.columns == want.columns
+    rows = sorted(map(tuple, want.collect()), key=repr)
+    assert rows and sorted(map(tuple, got.collect()), key=repr) == rows
+
+
+def test_cluster_near_dups_rejects_unknown_algorithm(spark):
+    df = spark.createDataFrame(_DOTTED_DOCS, "doc_id long, text string")
+    with pytest.raises(ValueError, match="'propagation'.*'star'"):
+        DD.cluster_near_dups(OmigoDF(df), algorithm="stars")

@@ -241,3 +241,26 @@ def test_timeseries_plan_node_counts(spark, name):
     got = tuple(len(re.findall(pat, p)) for pat in
                 (r"\bExchange\b", r"\bSort \[", r"\bWindow \[", r"\b\w*Join\b"))
     assert got == TIMESERIES_PLAN_NODES[name]
+
+
+# (shuffle Exchange, *Join, HashAggregate, Generate) node counts in the
+# executed plans of the edit-distance family at sf0.001. fuzzy_pairs,
+# dedup_fuzzy and fuzzy_join share one candidate core (census, rare-gram
+# join, length-bucket fallbacks); subplans behind its lazy checkpoints
+# show as one scan each.
+FUZZY_PLAN_NODES = {
+    "fuzzy_pairs": (6, 7, 4, 4),
+    "dedup_fuzzy": (8, 8, 6, 4),
+    "fuzzy_join": (6, 7, 4, 4),
+}
+
+
+@pytest.mark.parametrize("name", list(FUZZY_PLAN_NODES))
+def test_fuzzy_plan_node_counts(spark, name):
+    import re
+
+    p = _plan(spark, name)
+    got = tuple(len(re.findall(pat, p)) for pat in
+                (r"\bExchange\b", r"\b\w*Join\b", r"\bHashAggregate\b",
+                 r"\bGenerate\b"))
+    assert got == FUZZY_PLAN_NODES[name]
